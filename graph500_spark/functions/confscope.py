@@ -57,8 +57,10 @@ def release_scoped_conf(
 def scoped_session_confs(spark: SparkSession, confs: dict[str, str]):
     """Set session confs for the duration of the block, restoring the
     previous values after; concurrent scopers serialize on a global
-    reentrant lock. ``confs`` values are applied as strings; an empty
-    dict degrades to a no-op (no lock taken)."""
+    reentrant lock. ``confs`` values are applied as strings; a ``None``
+    value leaves that conf alone (a loop's unresolved override), and
+    nothing left to set degrades to a no-op (no lock taken)."""
+    confs = {k: v for k, v in confs.items() if v is not None}
     if not confs:
         yield
         return

@@ -33,14 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
+from graph500_spark.functions.literal import literal_frame
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 PRED_SCHEMA = T.StructType(
@@ -82,12 +77,16 @@ def bfs(
     per-level shuffles widen; the layout was already built). ``None``
     opts out entirely: the session value and AQE coalescing govern.
 
-    Job structure: the new frontier is eagerly checkpointed each level
-    (one materialization job + one cheap count over the cached leaf);
-    ``reached`` is kept as a union of the already-checkpointed
-    per-level frontiers, never re-materialized — re-checkpointing the
-    union every level would recopy all reached rows, turning total
-    work into O(n · depth).
+    Job structure: the root seed is a one-row frame built on the JVM
+    (functions/literal.py — no Python worker), lazily checkpointed so
+    the first level's broadcast build caches it. Each new frontier is
+    lazily checkpointed and materialized by its own count — one job
+    per level; ``reached`` is kept as a union of the
+    already-checkpointed per-level frontiers, never re-materialized —
+    re-checkpointing the union every level would recopy all reached
+    rows, turning total work into O(n · depth). The seed build and the
+    loop run inside the conf scope, so an exception anywhere restores
+    the session width and releases the scope lock.
 
     Join strategy: checkpointed DataFrames carry no size statistics, so
     Catalyst alone would plan every level as a shuffle join and move the
@@ -103,84 +102,79 @@ def bfs(
     if prepartition:
         edges = edges.repartition("src").persist()
 
-    sp_override = resolve_shuffle_partitions(
-        spark,
-        shuffle_partitions,
-        edge_count,
-        edges.count if prepartition else None,
-    )
-    saved_sp = None
-    if sp_override is not None:
-        # lock + set: conf scoping serializes across driver threads
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-
-    frontier = spark.createDataFrame(
-        [(int(root), int(root), 0)], schema=PRED_SCHEMA
-    ).transform(truncate_plan_lazy)
-    reached = frontier
-    depth = 0
-    n_frontier = 1
-    n_reached = 1
-
     try:
-        while True:
-            if max_depth is not None and depth >= max_depth:
-                break
-            depth += 1
-            # One logical step: frontier ⋈ adjacency → candidate
-            # (dst, src), keep min(src) per dst, drop already-reached.
-            frontier_side = frontier.select(F.col("vertex").alias("src"))
-            if n_frontier <= broadcast_rows:
-                frontier_side = F.broadcast(frontier_side)
-            reached_side = reached.select("vertex")
-            if n_reached <= broadcast_rows:
-                reached_side = F.broadcast(reached_side)
-            # Join order depends on whether `reached` broadcasts:
-            #  * broadcastable → anti-join FIRST: candidates pointing
-            #    at already-reached vertices (the majority on hub
-            #    levels) die map-side, and only genuinely-new ones
-            #    enter the groupBy shuffle;
-            #  * too big to broadcast → groupBy FIRST: the partial
-            #    (map-side) min-aggregation collapses duplicate dsts
-            #    before the shuffle, and the shuffled anti-join then
-            #    reuses the groupBy's hash partitioning on vertex.
-            candidates = edges.join(frontier_side, "src").select(
-                F.col("dst").alias("vertex"), F.col("src").alias("pred")
-            )
-            if n_reached <= broadcast_rows:
-                candidates = (
-                    candidates.join(reached_side, "vertex", "left_anti")
-                    .groupBy("vertex")
-                    .agg(F.min("pred").alias("pred"))
-                )
-            else:
-                candidates = (
-                    candidates.groupBy("vertex")
-                    .agg(F.min("pred").alias("pred"))
-                    .join(reached_side, "vertex", "left_anti")
-                )
-            candidates = candidates.withColumn("depth", F.lit(depth))
-            # localCheckpoint makes the frontier a LEAF plan: without
-            # it every level's plan tree embeds the previous level's
-            # twice (join + anti-join) — exponential plan-tree growth
-            # that overflows the JVM stack on deep graphs (persist()
-            # alone does not truncate the logical plan). The LAZY form
-            # fuses the materialization into the count below — one
-            # driver barrier per level instead of two (guide §1.2/§5).
-            new_frontier = candidates.transform(truncate_plan_lazy)
-            n_new = new_frontier.count()
-            if n_new == 0:
-                break
-            reached = reached.unionByName(new_frontier)
-            n_frontier = n_new
-            n_reached += n_new
-            frontier = new_frontier
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
+        sp_override = resolve_shuffle_partitions(
+            spark,
+            shuffle_partitions,
+            edge_count,
+            edges.count if prepartition else None,
         )
+        # conf scoping serializes across driver threads; the seed
+        # build runs inside the scope, so a failure restores it
+        with scoped_session_confs(
+            spark, {"spark.sql.shuffle.partitions": sp_override}
+        ):
+            frontier = literal_frame(
+                spark, [(root, root, 0)], PRED_SCHEMA
+            ).transform(truncate_plan_lazy)
+            reached = frontier
+            depth = 0
+            n_frontier = 1
+            n_reached = 1
+
+            while True:
+                if max_depth is not None and depth >= max_depth:
+                    break
+                depth += 1
+                # One logical step: frontier ⋈ adjacency → candidate
+                # (dst, src), keep min(src) per dst, drop already-reached.
+                frontier_side = frontier.select(F.col("vertex").alias("src"))
+                if n_frontier <= broadcast_rows:
+                    frontier_side = F.broadcast(frontier_side)
+                reached_side = reached.select("vertex")
+                if n_reached <= broadcast_rows:
+                    reached_side = F.broadcast(reached_side)
+                # Join order depends on whether `reached` broadcasts:
+                #  * broadcastable → anti-join FIRST: candidates pointing
+                #    at already-reached vertices (the majority on hub
+                #    levels) die map-side, and only genuinely-new ones
+                #    enter the groupBy shuffle;
+                #  * too big to broadcast → groupBy FIRST: the partial
+                #    (map-side) min-aggregation collapses duplicate dsts
+                #    before the shuffle, and the shuffled anti-join then
+                #    reuses the groupBy's hash partitioning on vertex.
+                candidates = edges.join(frontier_side, "src").select(
+                    F.col("dst").alias("vertex"), F.col("src").alias("pred")
+                )
+                if n_reached <= broadcast_rows:
+                    candidates = (
+                        candidates.join(reached_side, "vertex", "left_anti")
+                        .groupBy("vertex")
+                        .agg(F.min("pred").alias("pred"))
+                    )
+                else:
+                    candidates = (
+                        candidates.groupBy("vertex")
+                        .agg(F.min("pred").alias("pred"))
+                        .join(reached_side, "vertex", "left_anti")
+                    )
+                candidates = candidates.withColumn("depth", F.lit(depth))
+                # localCheckpoint makes the frontier a LEAF plan: without
+                # it every level's plan tree embeds the previous level's
+                # twice (join + anti-join) — exponential plan-tree growth
+                # that overflows the JVM stack on deep graphs (persist()
+                # alone does not truncate the logical plan). The LAZY form
+                # fuses the materialization into the count below — one
+                # driver barrier per level instead of two (guide §1.2/§5).
+                new_frontier = candidates.transform(truncate_plan_lazy)
+                n_new = new_frontier.count()
+                if n_new == 0:
+                    break
+                reached = reached.unionByName(new_frontier)
+                n_frontier = n_new
+                n_reached += n_new
+                frontier = new_frontier
+    finally:
         if prepartition:
             edges.unpersist()
     return reached
@@ -246,93 +240,89 @@ def bfs_multi(
     if prepartition:
         edges = edges.repartition("src").persist()
 
-    sp_override = resolve_shuffle_partitions(
-        spark,
-        shuffle_partitions,
-        edge_count,
-        edges.count if prepartition else None,
-    )
-    saved_sp = None
-    if sp_override is not None:
-        # lock + set: conf scoping serializes across driver threads
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
-        )
-
-    if with_pred:
-        frontier = spark.createDataFrame(
-            [(int(r), int(r), int(r), 0) for r in roots],
-            schema=MULTI_PRED_SCHEMA,
-        ).transform(truncate_plan_lazy)
-    else:
-        frontier = spark.createDataFrame(
-            [(int(r), int(r), 0) for r in roots],
-            schema=MULTI_DEPTH_SCHEMA,
-        ).transform(truncate_plan_lazy)
-    reached = frontier
-    depth = 0
-    n_frontier = len(roots)
-    n_reached = len(roots)
-
     try:
-        while True:
-            if max_depth is not None and depth >= max_depth:
-                break
-            depth += 1
-            frontier_side = frontier.select(
-                "root", F.col("vertex").alias("src")
-            )
-            if n_frontier <= broadcast_rows:
-                frontier_side = F.broadcast(frontier_side)
-            reached_side = reached.select("root", "vertex")
-            if n_reached <= broadcast_rows:
-                reached_side = F.broadcast(reached_side)
-            if with_pred:
-                candidates = edges.join(frontier_side, "src").select(
-                    "root",
-                    F.col("dst").alias("vertex"),
-                    F.col("src").alias("pred"),
-                )
-                if n_reached <= broadcast_rows:
-                    candidates = (
-                        candidates.join(
-                            reached_side, ["root", "vertex"], "left_anti"
-                        )
-                        .groupBy("root", "vertex")
-                        .agg(F.min("pred").alias("pred"))
-                    )
-                else:
-                    candidates = (
-                        candidates.groupBy("root", "vertex")
-                        .agg(F.min("pred").alias("pred"))
-                        .join(reached_side, ["root", "vertex"], "left_anti")
-                    )
-            else:
-                candidates = edges.join(frontier_side, "src").select(
-                    "root", F.col("dst").alias("vertex")
-                )
-                if n_reached <= broadcast_rows:
-                    candidates = candidates.join(
-                        reached_side, ["root", "vertex"], "left_anti"
-                    ).dropDuplicates(["root", "vertex"])
-                else:
-                    candidates = candidates.dropDuplicates(
-                        ["root", "vertex"]
-                    ).join(reached_side, ["root", "vertex"], "left_anti")
-            candidates = candidates.withColumn("depth", F.lit(depth))
-            # lazy checkpoint + count = one driver barrier per level
-            new_frontier = candidates.transform(truncate_plan_lazy)
-            n_new = new_frontier.count()
-            if n_new == 0:
-                break
-            reached = reached.unionByName(new_frontier)
-            n_frontier = n_new
-            n_reached += n_new
-            frontier = new_frontier
-    finally:
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
+        sp_override = resolve_shuffle_partitions(
+            spark,
+            shuffle_partitions,
+            edge_count,
+            edges.count if prepartition else None,
         )
+        # conf scoping serializes across driver threads; the seed
+        # build runs inside the scope, so a failure restores it
+        with scoped_session_confs(
+            spark, {"spark.sql.shuffle.partitions": sp_override}
+        ):
+            if with_pred:
+                seed = literal_frame(
+                    spark, [(r, r, r, 0) for r in roots], MULTI_PRED_SCHEMA
+                )
+            else:
+                seed = literal_frame(
+                    spark, [(r, r, 0) for r in roots], MULTI_DEPTH_SCHEMA
+                )
+            frontier = seed.transform(truncate_plan_lazy)
+            reached = frontier
+            depth = 0
+            n_frontier = len(roots)
+            n_reached = len(roots)
+
+            while True:
+                if max_depth is not None and depth >= max_depth:
+                    break
+                depth += 1
+                frontier_side = frontier.select(
+                    "root", F.col("vertex").alias("src")
+                )
+                if n_frontier <= broadcast_rows:
+                    frontier_side = F.broadcast(frontier_side)
+                reached_side = reached.select("root", "vertex")
+                if n_reached <= broadcast_rows:
+                    reached_side = F.broadcast(reached_side)
+                if with_pred:
+                    candidates = edges.join(frontier_side, "src").select(
+                        "root",
+                        F.col("dst").alias("vertex"),
+                        F.col("src").alias("pred"),
+                    )
+                    if n_reached <= broadcast_rows:
+                        candidates = (
+                            candidates.join(
+                                reached_side, ["root", "vertex"], "left_anti"
+                            )
+                            .groupBy("root", "vertex")
+                            .agg(F.min("pred").alias("pred"))
+                        )
+                    else:
+                        candidates = (
+                            candidates.groupBy("root", "vertex")
+                            .agg(F.min("pred").alias("pred"))
+                            .join(
+                                reached_side, ["root", "vertex"], "left_anti"
+                            )
+                        )
+                else:
+                    candidates = edges.join(frontier_side, "src").select(
+                        "root", F.col("dst").alias("vertex")
+                    )
+                    if n_reached <= broadcast_rows:
+                        candidates = candidates.join(
+                            reached_side, ["root", "vertex"], "left_anti"
+                        ).dropDuplicates(["root", "vertex"])
+                    else:
+                        candidates = candidates.dropDuplicates(
+                            ["root", "vertex"]
+                        ).join(reached_side, ["root", "vertex"], "left_anti")
+                candidates = candidates.withColumn("depth", F.lit(depth))
+                # lazy checkpoint + count = one driver barrier per level
+                new_frontier = candidates.transform(truncate_plan_lazy)
+                n_new = new_frontier.count()
+                if n_new == 0:
+                    break
+                reached = reached.unionByName(new_frontier)
+                n_frontier = n_new
+                n_reached += n_new
+                frontier = new_frontier
+    finally:
         if prepartition:
             edges.unpersist()
     return reached

@@ -37,6 +37,7 @@ from graph500_spark.functions.confscope import (
     acquire_scoped_conf,
     release_scoped_conf,
 )
+from graph500_spark.functions.literal import literal_frame
 from graph500_spark.functions.plantrunc import (
     truncate_plan,
     truncate_plan_lazy,
@@ -74,9 +75,10 @@ def betweenness_sampled(
     try:
         edges = edges_clean.select("src", "dst").persist()
         # ---- forward: depths + exact path counts per (root, vertex)
-        frontier = spark.createDataFrame(
+        frontier = literal_frame(
+            spark,
             [(r, r, 0, 1) for r in roots],
-            "root: long, vertex: long, depth: int, sigma: long",
+            "root long, vertex long, depth int, sigma long",
         ).transform(truncate_plan_lazy)
         levels = [frontier]
         # `seen` stays a LAZY union of the checkpointed levels (each
@@ -304,8 +306,6 @@ def betweenness_sampled(
                 delta.filter(F.col("vertex") != F.col("root"))
             )
         edges.unpersist()
-        if not acc_parts:
-            return spark.createDataFrame([], "vertex: long, bc_q: long")
         out = acc_parts[0]
         for p in acc_parts[1:]:
             out = out.unionAll(p)

@@ -11,8 +11,8 @@ Order sensitivity: the accepted set depends on replaying the exact
 candidate sequence — a distributed `limit` would be wrong (SURVEY.md
 §7.3). The candidate stream is generated driver-side (it is 64 items
 plus a handful of rejections); only the degree-membership test touches
-the cluster, in batches, via a semi-join against the has-edge vertex
-set.
+the cluster, in batches, via a semi-join of a JVM-built literal frame
+(functions/literal.py) against the has-edge vertex set.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph500_spark.functions import prng
+from graph500_spark.functions.literal import literal_frame
 
 
 def candidate_stream(nverts: int, start_counter: int, count: int) -> list[int]:
@@ -66,7 +67,7 @@ def find_roots(
             cands = candidate_stream(nverts, counter, batch)
             uniq = list(dict.fromkeys(cands))
             member_rows = (
-                spark.createDataFrame([(int(v),) for v in uniq], "v long")
+                literal_frame(spark, [(v,) for v in uniq], "v long")
                 .join(has_edge, "v", "left_semi")
                 .collect()
             )

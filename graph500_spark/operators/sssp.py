@@ -17,12 +17,21 @@ dist(v) is the true shortest distance and pred(v) = min{u :
 dist(u) + w(u,v) = dist(v)} — an oracle-checkable property (the
 queries registry pairs this with a DuckDB recursive-CTE oracle).
 
-Scale notes: per-round plan is one join (frontier is broadcast while
-small — driver-known counts, same strategy as operators/bfs.py) + one
-groupBy(vertex) min-aggregation; the dist table is re-merged by a
-union + min-agg, one shuffle on vertex. ``localCheckpoint`` truncates
-the per-round lineage. Rounds ≤ hop-diameter of the shortest-path
-tree (weights ≥ 1 ⇒ finite).
+Scale notes: a round touches only the changed set; there is no
+union + min-aggregation over all of ``dist``. The frontier (last
+round's improved entries) is broadcast onto the edge list and reduced
+to one min (dist, pred) offer per vertex — the round's only shuffle
+while the joins broadcast. The offers are left-joined against
+``dist`` to keep the ones that beat the current entry; those become
+the next frontier (lazy checkpoint, materialized by the round's count)
+and are folded into ``dist`` as ``dist ⋈anti improved ∪ improved``
+under a lazy checkpoint that the next round's join materializes.
+Every join side is broadcast while its driver-known row count stays
+under ``broadcast_rows``: the frontier and the improved keys by their
+counts, ``dist`` by an upper bound (seed rows + every round's improved
+count, no count job) — past it the join falls back to a shuffle join.
+Rounds ≤ hop-diameter of the shortest-path tree (weights ≥ 1 ⇒
+finite).
 """
 
 from __future__ import annotations
@@ -30,14 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from graph500_spark.functions.confscope import (
-    acquire_scoped_conf,
-    release_scoped_conf,
-)
-from graph500_spark.functions.plantrunc import (
-    truncate_plan,
-    truncate_plan_lazy,
-)
+from graph500_spark.functions.confscope import scoped_session_confs
+from graph500_spark.functions.literal import literal_frame
+from graph500_spark.functions.plantrunc import truncate_plan_lazy
 from graph500_spark.functions.sizing import resolve_shuffle_partitions
 
 DIST_SCHEMA = T.StructType(
@@ -63,8 +67,6 @@ def sssp(
     [src, dst, weight] with integer weights ≥ 1, already symmetrized
     if undirected semantics are wanted.
     """
-    edges = edges_weighted.select("src", "dst", "weight")
-
     # volume-derived default ("auto", functions/sizing.py): the edge
     # table is NOT persisted here, so auto engages only when the
     # caller supplies edge_count — never a scan over unpersisted
@@ -72,94 +74,94 @@ def sssp(
     sp_override = resolve_shuffle_partitions(
         spark, shuffle_partitions, edge_count
     )
-    saved_sp = None
-    if sp_override is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": sp_override}
+    ):
+        seed = literal_frame(spark, [(root, 0, root)], DIST_SCHEMA)
+        return _relax_rounds(
+            edges_weighted, seed, 1, [], max_rounds, broadcast_rows
         )
 
-    dist = spark.createDataFrame(
-        [(int(root), 0, int(root))], schema=DIST_SCHEMA
-    ).transform(truncate_plan_lazy)
-    frontier = dist
-    n_frontier = 1
+
+def _relax_rounds(
+    edges_weighted: DataFrame,
+    seed: DataFrame,
+    n_seed: int,
+    group: list[str],
+    max_rounds: int | None,
+    broadcast_rows: int,
+) -> DataFrame:
+    """The delta-frontier loop shared by ``sssp`` (``group`` empty) and
+    ``sssp_multi`` (``group == ["source"]``): state rows are keyed by
+    ``group + ["vertex"]`` and carry (dist, pred)."""
+    key = [*group, "vertex"]
+    edges = edges_weighted.select("src", "dst", "weight")
+
+    def bc(df, n):
+        return F.broadcast(df) if n <= broadcast_rows else df
+
+    dist = seed.transform(truncate_plan_lazy)
+    frontier, n_frontier = dist, n_seed
+    # upper bound on dist's rows: every improved row is either a new
+    # vertex or replaces one, so seed + Σ improved never undercounts
+    n_dist = n_seed
     rounds = 0
-
-    try:
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            rounds += 1
-            f_side = frontier.select(
-                F.col("vertex").alias("src"), F.col("dist").alias("f_dist")
-            )
-            if n_frontier <= broadcast_rows:
-                f_side = F.broadcast(f_side)
-            proposals = edges.join(f_side, "src").select(
-                F.col("dst").alias("vertex"),
-                (F.col("f_dist") + F.col("weight")).alias("dist"),
-                F.col("src").alias("pred"),
-            )
-            # merge: per vertex keep the lexicographic-min (dist, pred).
-            # The checkpoint makes the state a LEAF plan — the next
-            # round references it twice (union + improvement join), so
-            # anything short of truncation grows the plan tree
-            # exponentially with round count. LAZY: the improved.count
-            # below materializes merged AND improved in ONE job — one
-            # driver barrier per round instead of two (guide §1.2/§5).
-            merged = (
-                dist.unionByName(proposals)
-                .groupBy("vertex")
-                .agg(F.min(F.struct("dist", "pred")).alias("best"))
-                .select(
-                    "vertex",
-                    F.col("best.dist").alias("dist"),
-                    F.col("best.pred").alias("pred"),
-                )
-                .transform(truncate_plan_lazy)
-            )
-            # improved = entries that changed this round (new vertex or
-            # struct-smaller entry) — the next frontier
-            old = dist.select(
-                "vertex",
-                F.col("dist").alias("o_dist"),
-                F.col("pred").alias("o_pred"),
-            )
-            improved = (
-                merged.join(old, "vertex", "left")
-                .filter(
-                    F.col("o_dist").isNull()
-                    | (F.col("dist") < F.col("o_dist"))
-                    | (
-                        (F.col("dist") == F.col("o_dist"))
-                        & (F.col("pred") < F.col("o_pred"))
-                    )
-                )
-                .select("vertex", "dist", "pred")
-                .persist()  # shallow plan over two cached leaves
-            )
-            n_new = improved.count()
-            if n_new == 0:
-                improved.unpersist()
-                break
-            # the superseded round's blocks can be freed — without
-            # this, long loops accumulate O(rounds) cached state
-            old_dist, old_frontier = dist, frontier
-            dist = merged
-            frontier = improved
-            n_frontier = n_new
-            old_dist.unpersist()
-            if old_frontier is not old_dist:
-                old_frontier.unpersist()
-    finally:
-        # the last frontier's blocks are dead on every exit path
-        # (n_new==0 break, max_rounds break, or an error) — without
-        # this each invocation leaks one persisted frontier
-        if frontier is not dist:
-            frontier.unpersist()
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
+    while max_rounds is None or rounds < max_rounds:
+        rounds += 1
+        f_side = frontier.select(
+            *group, F.col("vertex").alias("src"), F.col("dist").alias("f_dist")
         )
+        offers = (
+            edges.join(bc(f_side, n_frontier), "src")
+            .groupBy(*group, F.col("dst").alias("vertex"))
+            .agg(
+                F.min(
+                    F.struct(
+                        (F.col("f_dist") + F.col("weight")).alias("dist"),
+                        F.col("src").alias("pred"),
+                    )
+                ).alias("best")
+            )
+            .select(*key, "best.dist", "best.pred")
+        )
+        old = dist.select(
+            *key, F.col("dist").alias("o_dist"), F.col("pred").alias("o_pred")
+        )
+        # improved = offers that beat the current entry (new vertex or
+        # a struct-smaller (dist, pred)) — the next frontier. LAZY: the
+        # count below materializes it; no separate checkpoint job.
+        improved = (
+            offers.join(bc(old, n_dist), key, "left")
+            .filter(
+                F.col("o_dist").isNull()
+                | (F.col("dist") < F.col("o_dist"))
+                | (
+                    (F.col("dist") == F.col("o_dist"))
+                    & (F.col("pred") < F.col("o_pred"))
+                )
+            )
+            .select(*key, "dist", "pred")
+            .transform(truncate_plan_lazy)
+        )
+        n_new = improved.count()
+        if n_new == 0:
+            break
+        # the union appends improved's partitions to dist's; a narrow
+        # coalesce back to the wider input keeps the state's width (and
+        # every later scan's task count) flat over rounds. The
+        # checkpoint keeps the state a LEAF plan (it is referenced
+        # twice per round); the next round's join computes it
+        width = max(
+            dist.rdd.getNumPartitions(), improved.rdd.getNumPartitions()
+        )
+        dist = (
+            dist.join(bc(improved.select(*key), n_new), key, "left_anti")
+            .unionByName(improved)
+            .coalesce(width)
+            .transform(truncate_plan_lazy)
+        )
+        frontier, n_frontier = improved, n_new
+        n_dist += n_new
     return dist
 
 
@@ -297,98 +299,25 @@ def sssp_multi(
     per root (the bench's bfs_s16 sequential-vs-batched pair measures
     that floor directly).
 
-    Scale shape per round: one frontier⋈edges equi-join on src (the
-    frontier broadcast while its TOTAL rows across sources stay under
-    the threshold — driver-known counts) + one (source, vertex)
-    min-struct merge with map-side partials. localCheckpoint
-    truncates per-round lineage exactly as the single-source loop."""
-    edges = edges_weighted.select("src", "dst", "weight")
-
+    Scale shape per round: the single-source round keyed by
+    (source, vertex) — the frontier broadcast onto the edge list, one
+    (source, vertex) min-struct shuffle with map-side partials, a left
+    join against ``dist`` and an anti-join + union fold of the
+    improved rows into it. Each join side is broadcast while its TOTAL
+    rows across sources stay under ``broadcast_rows`` (driver-known
+    counts; for ``dist`` the running bound roots + Σ improved)."""
     sp_override = resolve_shuffle_partitions(
         spark, shuffle_partitions, edge_count
     )
-    saved_sp = None
-    if sp_override is not None:
-        saved_sp = acquire_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", sp_override
+    with scoped_session_confs(
+        spark, {"spark.sql.shuffle.partitions": sp_override}
+    ):
+        seed = literal_frame(
+            spark,
+            [(r, r, 0, r) for r in roots],
+            "source long, vertex long, dist long, pred long",
         )
-
-    schema = (
-        "source long, vertex long, dist long, pred long"
-    )
-    dist = spark.createDataFrame(
-        [(int(r), int(r), 0, int(r)) for r in roots], schema
-    ).transform(truncate_plan_lazy)
-    frontier = dist
-    n_frontier = len(roots)
-    rounds = 0
-
-    try:
-        while True:
-            if max_rounds is not None and rounds >= max_rounds:
-                break
-            rounds += 1
-            f_side = frontier.select(
-                "source",
-                F.col("vertex").alias("src"),
-                F.col("dist").alias("f_dist"),
-            )
-            if n_frontier <= broadcast_rows:
-                f_side = F.broadcast(f_side)
-            proposals = edges.join(f_side, "src").select(
-                "source",
-                F.col("dst").alias("vertex"),
-                (F.col("f_dist") + F.col("weight")).alias("dist"),
-                F.col("src").alias("pred"),
-            )
-            merged = (
-                dist.unionByName(proposals)
-                .groupBy("source", "vertex")
-                .agg(F.min(F.struct("dist", "pred")).alias("best"))
-                .select(
-                    "source",
-                    "vertex",
-                    F.col("best.dist").alias("dist"),
-                    F.col("best.pred").alias("pred"),
-                )
-                # lazy: improved.count() materializes both in one job
-                .transform(truncate_plan_lazy)
-            )
-            old = dist.select(
-                "source",
-                "vertex",
-                F.col("dist").alias("o_dist"),
-                F.col("pred").alias("o_pred"),
-            )
-            improved = (
-                merged.join(old, ["source", "vertex"], "left")
-                .filter(
-                    F.col("o_dist").isNull()
-                    | (F.col("dist") < F.col("o_dist"))
-                    | (
-                        (F.col("dist") == F.col("o_dist"))
-                        & (F.col("pred") < F.col("o_pred"))
-                    )
-                )
-                .select("source", "vertex", "dist", "pred")
-                .persist()
-            )
-            n_new = improved.count()
-            if n_new == 0:
-                improved.unpersist()
-                break
-            old_dist, old_frontier = dist, frontier
-            dist = merged
-            frontier = improved
-            n_frontier = n_new
-            old_dist.unpersist()
-            if old_frontier is not old_dist:
-                old_frontier.unpersist()
-    finally:
-        # same per-invocation frontier-leak fix as sssp() above
-        if frontier is not dist:
-            frontier.unpersist()
-        release_scoped_conf(
-            spark, "spark.sql.shuffle.partitions", saved_sp
+        return _relax_rounds(
+            edges_weighted, seed, len(roots), ["source"], max_rounds,
+            broadcast_rows,
         )
-    return dist

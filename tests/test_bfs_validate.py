@@ -27,6 +27,9 @@ def chain_graph(spark):
 def test_bfs_chain(spark, chain_graph):
     raw, clean = chain_graph
     pred = bfs_mod.bfs(spark, clean, 0, prepartition=False)
+    assert pred.dtypes == [
+        ("vertex", "bigint"), ("pred", "bigint"), ("depth", "int")
+    ]
     got = {r["vertex"]: (r["pred"], r["depth"]) for r in pred.collect()}
     assert got == {
         0: (0, 0),
@@ -129,7 +132,10 @@ def test_bfs_on_kronecker_graph_validates(spark):
     from graph500_spark.operators import roots as roots_mod
 
     rts = roots_mod.find_roots(spark, raw, 1 << 7, num_roots=2)
-    assert len(rts) == 2
+    assert rts == [57, 26]
+    # small batches: several candidate frames, same replayed sequence
+    assert roots_mod.find_roots(spark, raw, 1 << 7, num_roots=8, batch=4) \
+        == [57, 26, 27, 15, 120, 49, 1, 58]
     for root in rts:
         pred = bfs_mod.bfs(spark, clean, root, prepartition=False)
         summary = V.validate_bfs(raw, pred, root, 1 << 7)
@@ -195,7 +201,13 @@ class TestBfsMulti:
             shuffle_partitions=8,
             with_pred=False,
         )
-        assert lean.columns == ["root", "vertex", "depth"]
+        assert full.dtypes == [
+            ("root", "bigint"), ("vertex", "bigint"),
+            ("pred", "bigint"), ("depth", "int"),
+        ]
+        assert lean.dtypes == [
+            ("root", "bigint"), ("vertex", "bigint"), ("depth", "int")
+        ]
         want = sorted(
             (r["root"], r["vertex"], r["depth"]) for r in full.collect()
         )

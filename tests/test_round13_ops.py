@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -82,6 +83,53 @@ def test_conf_scope_serializes_threads(spark):
     t1.start(); t2.start(); t1.join(); t2.join()
     assert sorted(seen) == [("3", "3"), ("5", "5")]
     assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize(
+    "module, op, start",
+    [
+        ("sssp", "sssp", 1),
+        ("sssp", "sssp_multi", [1, 2]),
+        ("bfs", "bfs", 1),
+        ("bfs", "bfs_multi", [1, 2]),
+    ],
+)
+def test_loop_entry_failure_releases_conf_scope(
+    spark, monkeypatch, module, op, start
+):
+    """An exception while a scoped loop builds its seed must restore
+    the scoped conf and release the conf-scope lock: edge_count=10**9
+    engages the "auto" width, and the seed's checkpoint raises."""
+    import importlib
+
+    from graph500_spark.functions.confscope import _CONF_LOCK
+
+    mod = importlib.import_module(f"graph500_spark.operators.{module}")
+
+    def boom(df):
+        raise RuntimeError("seed build failed")
+
+    monkeypatch.setattr(mod, "truncate_plan_lazy", boom)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 1, 1)], "src long, dst long, weight long"
+    )
+    with pytest.raises(RuntimeError, match="seed build failed"):
+        getattr(mod, op)(spark, edges, start, edge_count=10**9)
+    assert spark.conf.get(key) == before
+
+    got: list[bool] = []
+
+    def other_scoper():
+        got.append(_CONF_LOCK.acquire(timeout=1))
+        if got[0]:
+            _CONF_LOCK.release()
+
+    t = threading.Thread(target=other_scoper)
+    t.start()
+    t.join()
+    assert got == [True]
 
 
 def test_conf_scoping_operator_inside_pooled_rank(spark, tmp_path):

@@ -3,6 +3,7 @@ known answers, plus the lexicographic-pred determinism property."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from graph500_spark.operators.components import connected_components
@@ -106,6 +107,85 @@ def test_validate_sssp_clean_and_corrupted(spark):
     assert s2["tree_weights"] >= 1  # claimed parent edge doesn't exist
 
 
+def _dijkstra_tree(rows, root):
+    """Reference tree: true distances by Dijkstra, then the min-pred
+    tie-break pred(v) = min{u : dist(u) + w(u, v) == dist(v)}."""
+    import heapq
+
+    adj: dict[int, list[tuple[int, int]]] = {}
+    for s, d, w in rows:
+        adj.setdefault(s, []).append((d, w))
+    dist = {root: 0}
+    heap = [(0, root)]
+    while heap:
+        du, u = heapq.heappop(heap)
+        if du > dist[u]:
+            continue
+        for v, w in adj.get(u, []):
+            if du + w < dist.get(v, du + w + 1):
+                dist[v] = du + w
+                heapq.heappush(heap, (du + w, v))
+    tree = {root: (0, root)}
+    for s, d, w in rows:
+        if d != root and s in dist and dist[s] + w == dist[d]:
+            tree[d] = (dist[d], min(s, tree.get(d, (0, s))[1]))
+    return tree
+
+
+# directed (asymmetric) list: edges run one way only (2→0 with no
+# 0→2; 5→0 with no edge back, so 5 is never reached; 4 is a sink)
+_DIRECTED = [(0, 1, 2), (1, 2, 2), (2, 0, 1), (0, 3, 7), (3, 4, 1),
+             (2, 3, 1), (5, 0, 1)]
+# vertex 9 is reached in round 1 over an expensive edge (100), improved
+# in round 2 via 1 (1 + 50) and again in round 5 by the cheap chain
+_REIMPROVED = [(0, 9, 100), (0, 1, 1), (1, 9, 50), (1, 2, 1),
+               (2, 3, 1), (3, 4, 1), (4, 9, 1)]
+# vertex 9 gets (4, pred 5) in round 2; the chain delivers the same
+# distance with the smaller pred 3 only in round 4
+_LATE_TIE = [(0, 5, 2), (5, 9, 2), (0, 1, 1), (1, 2, 1), (2, 3, 1),
+             (3, 9, 1)]
+_ROUND_CASES = {
+    "directed": (_DIRECTED, [0, 2]),
+    "reimproved": (_sym(_REIMPROVED), [0, 9]),
+    "late_tie": (_sym(_LATE_TIE), [0, 3]),
+}
+
+
+@pytest.mark.parametrize("broadcast_rows", [2_000_000, 0])
+@pytest.mark.parametrize("case", sorted(_ROUND_CASES))
+def test_sssp_rounds_match_dijkstra(spark, case, broadcast_rows):
+    """sssp and sssp_multi against the reference tree on the round
+    shapes a Kronecker graph may never produce; broadcast_rows=0 puts
+    every join on the shuffle branch. Output columns and types are
+    part of the contract."""
+    from graph500_spark.operators.sssp import sssp_multi
+
+    rows, roots = _ROUND_CASES[case]
+    edges = _weighted(spark, rows)
+    for root in roots:
+        out = sssp(spark, edges, root, broadcast_rows=broadcast_rows)
+        assert out.dtypes == [
+            ("vertex", "bigint"), ("dist", "bigint"), ("pred", "bigint")
+        ]
+        got = {r["vertex"]: (r["dist"], r["pred"]) for r in out.collect()}
+        assert got == _dijkstra_tree(rows, root), (case, root)
+    multi = sssp_multi(spark, edges, roots, broadcast_rows=broadcast_rows)
+    assert multi.dtypes == [
+        ("source", "bigint"), ("vertex", "bigint"),
+        ("dist", "bigint"), ("pred", "bigint"),
+    ]
+    got = {
+        (r["source"], r["vertex"]): (r["dist"], r["pred"])
+        for r in multi.collect()
+    }
+    want = {
+        (root, v): entry
+        for root in roots
+        for v, entry in _dijkstra_tree(rows, root).items()
+    }
+    assert got == want, case
+
+
 def test_connected_components_two_islands(spark):
     rows = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12)]
     edges = spark.createDataFrame(rows, "src long, dst long")
@@ -188,12 +268,9 @@ class TestBetweennessSampled:
         edges = spark.createDataFrame(
             und + [(b, a) for a, b in und], "src: long, dst: long"
         )
-        return {
-            r.vertex: r.bc_q
-            for r in betweenness_sampled(
-                spark, edges, roots, shuffle_partitions=4
-            ).collect()
-        }
+        out = betweenness_sampled(spark, edges, roots, shuffle_partitions=4)
+        assert out.dtypes == [("vertex", "bigint"), ("bc_q", "bigint")]
+        return {r.vertex: r.bc_q for r in out.collect()}
 
     def test_path_center_carries_flow(self, spark):
         # path 1-2-3, root 1: δ(2) = 1 → 10^6 micro-units
